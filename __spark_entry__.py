@@ -32,6 +32,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _extract_text(text, doc_type):
+    """The extraction boundary (``fused_extract_udf``) over a text column
+    alone: no HTML payload and no claims, so the match fold is empty."""
+    from ocr_api_spark.operators.extract import fused_extract_udf
+
+    no_claims = [F.lit(None).cast("string")] * 9
+    return fused_extract_udf(text, F.lit(None).cast("binary"), doc_type, *no_claims)
+
+
 # --------------------------------------------------------------------------
 # flagship
 # --------------------------------------------------------------------------
@@ -41,7 +50,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the extraction spine over sf0.001 ``documents`` —
     scan → JVM text features → Arrow extraction UDF → struct output.
     (The byte-identical pages pipeline is exercised in tests/ and bench.)"""
-    from ocr_api_spark.operators.extract import extract_udf
     from ocr_api_spark.operators.textstats import (
         with_fingerprint,
         with_lang_guess,
@@ -51,7 +59,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     enriched = with_fingerprint(with_lang_guess(with_stopword_ratio(with_quality(docs))))
-    extracted = enriched.withColumn("extraction", extract_udf(F.col("text"), F.lit("pan")))
+    extracted = enriched.withColumn("extraction", _extract_text(F.col("text"), F.lit("pan")))
     return extracted.select(
         "doc_id",
         "lang",
@@ -2372,7 +2380,7 @@ _CORPUS_KEY_SQL = "(SELECT sum(length(text))::BIGINT FROM documents)"
 def _write_expected_extractions(sf_dir: str) -> None:
     """Turn the kernel-extraction queries into exact value checks: run the
     SAME parity-proven batch kernel (operators.extract.extract_batch, which
-    the pandas UDF wraps) locally on the driver over the documents table and
+    fused_extract_udf wraps) locally on the driver over the documents table and
     persist the expected rows as parquet; the DuckDB oracle reads them back
     with read_parquet.  Distributed execution must therefore equal local
     kernel execution row-for-row — and the kernel itself is differentially
@@ -2585,11 +2593,9 @@ WHERE corpus_key = {_CORPUS_KEY_SQL}
 
 
 def _extract_pan_over_documents(spark, sf_dir):
-    from ocr_api_spark.operators.extract import extract_udf
-
     _write_expected_extractions(sf_dir)
     docs = _t(spark, sf_dir, "documents")
-    ex = docs.withColumn("extraction", extract_udf(F.col("text"), F.lit("pan")))
+    ex = docs.withColumn("extraction", _extract_text(F.col("text"), F.lit("pan")))
     return ex.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("extraction.status").alias("status"),
@@ -2602,8 +2608,6 @@ def _extract_all_branches(spark, sf_dir):
     """Every extractor branch (pan/aadhaar/bank/financial/dl/passport)
     exercised distributed, doc_type round-robined by doc_id — checked
     exactly against the driver-side kernel run (differential oracle)."""
-    from ocr_api_spark.operators.extract import extract_udf
-
     _write_expected_extractions(sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 600)
     doc_type = F.element_at(
@@ -2611,7 +2615,7 @@ def _extract_all_branches(spark, sf_dir):
         (F.col("doc_id") % 6 + 1).cast("int"),
     )
     ex = docs.withColumn("doc_type", doc_type).withColumn(
-        "extraction", extract_udf(F.col("text"), F.col("doc_type"))
+        "extraction", _extract_text(F.col("text"), F.col("doc_type"))
     )
     return ex.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),

@@ -1,7 +1,10 @@
-"""The extraction and match UDF stages.
+"""The extraction boundary: one Arrow-batched ``pandas_udf``.
 
-Arrow-batched ``pandas_udf``s wrapping the pure kernels — the only
-Python↔JVM boundaries in the pipeline, amortized per batch.  Regexes
+``fused_extract_udf`` resolves page text, extracts fields and folds the
+claim match in one JVM↔Python crossing per batch.  It is the only
+Python boundary for extraction; batch, streaming and the entry queries
+all call it.  ``extract_batch`` and ``match_batch`` are the batch
+kernels it composes; the driver-side oracles call them directly.  Regexes
 compile once per Python worker at module import (the per-executor
 singleton pattern; contrast the reference's per-request PaddleOCR
 construction, app.py:2163 — the single biggest throughput lever noted
@@ -16,7 +19,6 @@ Failed row (app.py:2280).  A poison row never kills a partition.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -199,11 +201,6 @@ def extract_batch(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=list(EXTRACT_SCHEMA.fieldNames()))
 
 
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
-    return extract_batch(texts, doc_types)
-
-
 def _payload_to_text(payload) -> str | None:
     """Binary payload → text: the S4 PDF text layer for ``%PDF`` payloads
     (per-page extract_text + clean_text, app.py:3202-3212 with the §0.1
@@ -222,15 +219,6 @@ def _payload_to_text(payload) -> str | None:
                 return None  # undecodable here -> C4 sends it to the OCR branch
         payload = raw.decode("utf-8", errors="replace")
     return boilerplate.extract_main_text(payload)
-
-
-@pandas_udf(StringType())
-def boilerplate_udf(htmls: pd.Series) -> pd.Series:
-    """binary payload → main-content text (HTML boilerplate strip, or the
-    PDF text layer for %PDF payloads).  Null-propagating, so wiring it
-    as ``coalesce(nullif(text, ''), boilerplate_udf(when(text='', html)))``
-    only pays the parse for rows that need it."""
-    return htmls.map(_payload_to_text)
 
 
 def match_batch(
@@ -318,25 +306,6 @@ def match_batch(
     return pd.DataFrame(out, columns=["percentages", "average_match_percentage"])
 
 
-@pandas_udf(MATCH_SCHEMA)
-def match_udf(
-    doc_types: pd.Series,
-    extracted: pd.Series,
-    names: pd.Series,
-    father_names: pd.Series,
-    dobs: pd.Series,
-    pans: pd.Series,
-    adharnos: pd.Series,
-    addresses: pd.Series,
-    ifscs: pd.Series,
-    micrs: pd.Series,
-    accounts: pd.Series,
-) -> pd.DataFrame:
-    return match_batch(
-        doc_types, extracted, names, father_names, dobs, pans, adharnos, addresses, ifscs, micrs, accounts
-    )
-
-
 FULL_SCHEMA = StructType(list(EXTRACT_SCHEMA.fields) + [StructField("match", MATCH_SCHEMA, True)])
 
 
@@ -356,10 +325,10 @@ def fused_extract_udf(
     accounts: pd.Series,
 ) -> pd.DataFrame:
     """Single-crossing stage: boilerplate (when text is empty) + field
-    extraction + match fold in ONE Arrow round trip.  The separate
-    ``boilerplate_udf``/``extract_udf``/``match_udf`` remain for
-    composability; the pipeline uses this to avoid shipping page-sized
-    payloads across the JVM↔Python boundary three times."""
+    extraction + match fold in ONE Arrow round trip, so page-sized
+    payloads cross the JVM↔Python boundary once.  Callers without an
+    HTML payload or claims pass null columns; an empty or null text with
+    no payload resolves to None and fails the row with 'no text'."""
 
     def resolve(text, html):
         if text:
@@ -388,16 +357,3 @@ def fused_extract_udf(
         accounts,
     ).to_dict("records")
     return out
-
-
-def resolve_text_column(df):
-    """``coalesce(nullif(text,''), boilerplate(html))`` — the C4-style
-    lazy fallback: HTML parsing only runs for rows without text, and the
-    parquet scan can prune ``html`` entirely when every row has text."""
-    needs_html = F.when(
-        F.col("text").isNull() | (F.length("text") == 0), F.col("html")
-    )
-    return df.withColumn(
-        "resolved_text",
-        F.coalesce(F.nullif(F.col("text"), F.lit("")), boilerplate_udf(needs_html)),
-    )

@@ -188,7 +188,7 @@ def test_e4_passport_lifecycle_end_to_end(session):
     the real kernels."""
     from pyspark.sql import functions as F
 
-    from ocr_api_spark.operators.extract import extract_udf
+    from ocr_api_spark.operators.extract import fused_extract_udf
     from ocr_api_spark.operators.multimodal import preocr_chain, with_token_text
 
     rng = np.random.default_rng(17)
@@ -216,8 +216,12 @@ def test_e4_passport_lifecycle_end_to_end(session):
     )
     staged = pre.join(toks_df, "url")
     texted = with_token_text(staged, conf_threshold=0.5)
+    no_claims = [F.lit(None).cast("string")] * 9
+    extraction = fused_extract_udf(
+        F.col("token_text"), F.lit(None).cast("binary"), F.lit("passport"), *no_claims
+    )
     out = (
-        texted.withColumn("extraction", extract_udf(F.col("token_text"), F.lit("passport")))
+        texted.withColumn("extraction", extraction)
         .select("url", "extraction.status", "extraction.passport.*")
         .collect()[0]
     )

@@ -83,6 +83,23 @@ def test_extraction_plan_prebucketed_shuffle_free(session, tmp_path):
     assert "BroadcastExchange" in plan
 
 
+@pytest.mark.parametrize("with_claims", [False, True], ids=["no_claims", "claims"])
+def test_streaming_extraction_single_arrow_stage(session, tmp_path, with_claims):
+    """Streaming shares the batch boundary: page text crosses into
+    Python once (one fused ArrowEvalPython), with or without the
+    stream-static claims join."""
+    from ocr_api_spark.sources.pages import write_pages
+    from ocr_api_spark.streaming.stream import extraction_stream, read_pages_stream
+
+    paths = write_pages(str(tmp_path / "in"), n_rows=20, seed=14)
+    stream_dir = tmp_path / "pages_stream"
+    stream_dir.mkdir()
+    (stream_dir / "pages.parquet").hardlink_to(paths["pages"])
+    claims = session.read.parquet(paths["claims"]) if with_claims else None
+    plan = explain_str(extraction_stream(read_pages_stream(session, str(stream_dir)), claims))
+    assert plan.count(") ArrowEvalPython") == 1, plan
+
+
 def test_resume_filter_is_on_scan_side(session, tmp_path):
     """The bucket filter applied on re-run must sit below the UDF stage
     (cheap pre-extraction pruning), not above it."""

@@ -136,14 +136,14 @@ def test_credits_ledger_stateful(session, synth, tmp_path):
 def test_stream_static_claims_join(session, synth, tmp_path):
     import os
 
-    from ocr_api_spark.streaming.stream import extraction_stream_with_claims, read_pages_stream
+    from ocr_api_spark.streaming.stream import extraction_stream, read_pages_stream
 
     stream_dir = str(tmp_path / "pages_stream")
     os.makedirs(stream_dir)
     os.link(synth["pages"], os.path.join(stream_dir, "pages.parquet"))
     claims = session.read.parquet(synth["claims"])
 
-    out = extraction_stream_with_claims(read_pages_stream(session, stream_dir), claims)
+    out = extraction_stream(read_pages_stream(session, stream_dir), claims)
     q = (
         out.writeStream.format("memory")
         .queryName("stream_claims")
