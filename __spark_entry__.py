@@ -1678,7 +1678,7 @@ def _image_feature_row(doc_id: int, text: str) -> tuple:
     from ocr_api_spark.operators.multimodal import _Decoder
 
     payload = _image_payload(doc_id, text)
-    feature, status = _Decoder.get().decode(payload)
+    feature, status = _Decoder.decode(payload)
     return status, [float(v) for v in feature]
 
 

@@ -53,6 +53,14 @@ def _shingle_array(text_col: str, n: int, distinct: bool = True):
     return F.filter(shingles, lambda s: F.length(s) > 0)
 
 
+def _minhash_hash(j: int, shingle):
+    """h_j(s) = md5('<j>:' || s) — THE min-hash hash every signature
+    (batch, array-based and streaming near-key) and every DuckDB oracle
+    shares.  ``shingle`` is a string Column or a higher-order-function
+    lambda variable."""
+    return F.md5(F.concat(F.lit(f"{j}:"), shingle))
+
+
 def word_shingles(df: DataFrame, text_col: str, n: int, id_col: str = "doc_id") -> DataFrame:
     """Distinct word n-gram shingles per document: (id_col, shingle).
 
@@ -84,9 +92,7 @@ def minhash_signatures(shingled: DataFrame, k: int, id_col: str = "doc_id") -> D
     valid min-hash (uniform order) and is bit-identical across Spark
     and DuckDB.  Costs a shuffle (groupBy doc) — prefer
     ``minhash_signatures_arr`` when starting from the text column."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}") for i in range(k)
-    ]
+    aggs = [F.min(_minhash_hash(i, F.col("shingle"))).alias(f"mh{i}") for i in range(k)]
     return shingled.groupBy(id_col).agg(*aggs)
 
 
@@ -113,9 +119,7 @@ def minhash_signatures_arr(
     sh = df.select(
         F.col(id_col), F.explode(_shingle_array(text_col, n, distinct=False)).alias("__s")
     )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("__s")))).alias(f"mh{j}") for j in range(k)
-    ]
+    aggs = [F.min(_minhash_hash(j, F.col("__s"))).alias(f"mh{j}") for j in range(k)]
     return sh.groupBy(id_col).agg(*aggs)
 
 

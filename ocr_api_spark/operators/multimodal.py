@@ -1,12 +1,13 @@
 """Multimodal payload operators (image/PDF branch plumbing).
 
-The reference's image ops (SURVEY.md §2.6 I1-I13) need OpenCV /
-pdf2image / OCR engines that are not in this container, so the *decode*
-step is stubbed behind import gates — but the Spark-side plumbing is
-real: binary payload columns with typed metadata, Arrow-batched
-``mapInPandas`` with a per-executor singleton decoder, deterministic
-fake features for tests, and the token-table masking path (which is
-pure geometry and fully implemented via the kernel).
+The reference's image ops (SURVEY.md §2.6 I1-I13) run on OpenCV /
+pdf2image / OCR engines; here pixels decode through the repo's own
+numpy codecs and preprocessing kernels, and only OCR stays behind an
+injectable hook.  The Spark-side plumbing is real: binary payload
+columns with typed metadata, Arrow-batched ``mapInPandas`` over a
+stateless decoder, deterministic fake features for opaque payloads,
+and the token-table masking path (pure geometry, fully implemented via
+the kernel).
 
 Schema contract for opaque payloads:
     payload: binary, payload_kind: string ('image'|'pdf'|'audio'|...),
@@ -45,42 +46,23 @@ FEATURE_SCHEMA = StructType(
 
 
 class _Decoder:
-    """Per-executor singleton (the reference reconstructs its OCR model
-    per request, app.py:2163 — this is the fix).
+    """Stateless payload decoder: static methods only, nothing to build
+    per executor or per row.
 
     Backends, in order:
     - ``numpy``: payloads that parse as ``.npy`` arrays (H×W or H×W×C
       uint8) — the decoded-pixel interchange format.
-    - ``cv2.imdecode`` where OpenCV is installed (production): the
-      ~20-50x fast path for PNG/JPEG bytes, same pixel conventions.
     - ``png``/``jpeg``: the pure-numpy codecs (``kernels/png.py``:
       zlib inflate + row unfiltering, all depths + Adam7;
-      ``kernels/jpeg.py``: T.81 baseline + progressive) — the tested
-      fallback in this container, decoding to the same cv2 BGR/BGRA
-      convention ``cv2.imdecode`` yields in the reference flow
-      (app.py:419-443, 5099).
+      ``kernels/jpeg.py``: T.81 baseline + progressive), decoding to
+      the same cv2 BGR/BGRA convention ``cv2.imdecode`` yields in the
+      reference flow (app.py:419-443, 5099).
     All pixel paths run the REAL preprocessing kernels
     (``kernels/image.py``: alpha flatten → grayscale → the PAN pre-OCR
     chain) and emit real image statistics as the feature vector.
     - ``fake``: anything else yields a deterministic md5-derived
       feature, so opaque test payloads still flow through the same
       batch shape."""
-
-    _instance = None
-
-    @classmethod
-    def get(cls):
-        if cls._instance is None:
-            cls._instance = cls()
-        return cls._instance
-
-    def __init__(self) -> None:
-        try:  # pragma: no cover - not present in this container
-            import cv2  # noqa: F401
-
-            self.has_cv2 = True
-        except ImportError:
-            self.has_cv2 = False
 
     @staticmethod
     def _try_npy(payload: bytes):
@@ -131,33 +113,6 @@ class _Decoder:
         return arr
 
     @classmethod
-    def _try_cv2(cls, payload: bytes):
-        """cv2.imdecode fast path where OpenCV is installed (production
-        executors): ~20-50x the pure-numpy codecs on the same bytes,
-        same BGR/BGRA/gray conventions.  Absent in this container —
-        the numpy codecs below are the tested fallback and the
-        determinism reference (skip-if-absent parity test).
-
-        Engine policy is shared with the image kernels (review r5):
-        ``OCR_API_SPARK_DISABLE_CV2`` disables this path too, so
-        pinning the fleet to the numpy engine pins the DECODER as well
-        and ``image_engine()``'s provenance stamp covers both."""
-        from ocr_api_spark.kernels.image import _cv2
-
-        cv2 = _cv2()
-        if cv2 is None:
-            return None
-        import numpy as np  # pragma: no cover - cv2 not in this container
-        if payload is None or not (
-            payload.startswith(b"\x89PNG\r\n\x1a\n") or payload.startswith(b"\xff\xd8")
-        ):
-            return None
-        arr = cv2.imdecode(np.frombuffer(payload, dtype=np.uint8), cv2.IMREAD_UNCHANGED)
-        if arr is None or arr.ndim not in (2, 3) or arr.dtype != np.uint8 or arr.size == 0:
-            return None
-        return arr
-
-    @classmethod
     def _try_pixels(cls, payload: bytes):
         """(array, kind) for any decodable payload — 'numpy' | 'png' |
         'jpeg' — else (None, None).  Arrays follow the cv2 convention
@@ -165,9 +120,6 @@ class _Decoder:
         arr = cls._try_npy(payload)
         if arr is not None:
             return arr, "numpy"
-        cv2_arr = cls._try_cv2(payload)
-        if cv2_arr is not None:  # pragma: no cover - cv2 not in container
-            return cv2_arr, "png" if payload.startswith(b"\x89PNG") else "jpeg"
         arr = cls._try_png(payload)
         if arr is not None:
             return arr, "png"
@@ -176,10 +128,11 @@ class _Decoder:
             return arr, "jpeg"
         return None, None
 
-    def decode(self, payload: bytes) -> tuple[list[float], str]:
+    @staticmethod
+    def decode(payload: bytes) -> tuple[list[float], str]:
         if payload is None:
             return [], "empty"
-        arr, kind = self._try_pixels(payload)
+        arr, kind = _Decoder._try_pixels(payload)
         if arr is not None:
             import numpy as np
 
@@ -212,15 +165,15 @@ class _Decoder:
 
 def image_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """``mapInPandas`` feature extraction over binary payloads — the
-    batch shape, schema, and singleton pattern are the production path;
-    only the decode math is a stand-in."""
+    batch shape and schema are the production path; pixel payloads
+    decode through ``_Decoder`` and the real preprocessing kernels,
+    anything else gets a deterministic stand-in feature."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = _Decoder.get()
         for pdf in batches:
             feats, statuses, sizes = [], [], []
             for payload in pdf[payload_col]:
-                f, s = dec.decode(payload)
+                f, s = _Decoder.decode(payload)
                 feats.append(f)
                 statuses.append(s)
                 sizes.append(len(payload) if payload is not None else 0)
@@ -324,9 +277,9 @@ def preocr_chain(df: DataFrame, payload_col: str = "payload", osd_fn=None) -> Da
     ``osd_fn(img) -> str`` is the injectable OSD text source (a
     Tesseract subprocess in production).  Default None reproduces
     ``detect_osd_angle``'s default-0 fallback when Tesseract is absent.
-    Per-executor decode state goes through the ``_Decoder`` singleton;
-    the output image travels as ``.npy`` bytes, one Arrow crossing in,
-    one out."""
+    Payloads decode through ``_Decoder._try_pixels`` (.npy, PNG or
+    JPEG); the output image travels as ``.npy`` bytes, one Arrow
+    crossing in, one out."""
     import io
 
     import numpy as np

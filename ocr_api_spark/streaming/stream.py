@@ -78,12 +78,10 @@ def with_near_key(pages: DataFrame, n: int = 3, k: int = 4) -> DataFrame:
     """The near-dup key as a pure projection (usable on batch frames
     too): k shingle-set min-hashes concatenated; html-md5 fallback for
     text-less rows.  See ``near_dup_stream`` for semantics."""
-    from ocr_api_spark.operators.dedup import _shingle_array
+    from ocr_api_spark.operators.dedup import _minhash_hash, _shingle_array
 
     def mh(j: int):
-        return F.array_min(
-            F.transform(F.col("__sh"), lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        )
+        return F.array_min(F.transform(F.col("__sh"), lambda s: _minhash_hash(j, s)))
 
     return pages.withColumn("__sh", _shingle_array("text", n)).withColumn(
         "near_key",

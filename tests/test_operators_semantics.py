@@ -317,6 +317,76 @@ def test_minhash_projection_equals_exploded_form(session, near_dup_docs):
     assert exploded == projected
 
 
+def test_near_key_equals_minhash_signatures_arr(session, near_dup_docs):
+    """The streaming near-dup key is the batch signature in another
+    shape: for every doc with shingles, ``with_near_key``'s key equals
+    ``concat_ws('|', mh0..mh3)`` of ``minhash_signatures_arr`` (same
+    hash, same shingle set)."""
+    from pyspark.sql import functions as F
+
+    from ocr_api_spark.operators.dedup import minhash_signatures_arr
+    from ocr_api_spark.streaming.stream import with_near_key
+
+    extra = [(5, "two words"), (6, "spaced  out   words here")]
+    docs = near_dup_docs.union(session.createDataFrame(extra, near_dup_docs.schema)).select(
+        "doc_id",
+        "text",
+        F.concat(F.lit("http://d/"), F.col("doc_id").cast("string")).alias("url"),
+        F.lit(None).cast("binary").alias("html"),
+    )
+    sigs = minhash_signatures_arr(docs, "text", 3, k=4).select(
+        "doc_id", F.concat_ws("|", *[F.col(f"mh{j}") for j in range(4)]).alias("sig")
+    )
+    want = {r["doc_id"]: r["sig"] for r in sigs.collect()}
+    got = {r["doc_id"]: r["near_key"] for r in with_near_key(docs).collect()}
+    assert set(want) == set(range(7))
+    assert got == want
+
+
+def _shingle_set(text: str, n: int) -> set[str]:
+    words = text.split(" ")
+    return {s for s in (" ".join(words[i : i + n]) for i in range(max(len(words) - n, 0) + 1)) if s}
+
+
+def test_duplicate_ids_shingle_rows_and_deterministic_jaccard(session):
+    """``word_shingles`` does not merge rows that share an id: each row
+    contributes its own distinct shingles, so a repeated id yields
+    duplicate (id, shingle) rows.  ``ngram_jaccard_pairs`` over such a
+    frame takes the smaller per-row shingle count and returns the same
+    rows whatever the partitioning."""
+    from collections import Counter
+
+    from ocr_api_spark.operators.dedup import ngram_jaccard_pairs, word_shingles
+
+    rows = [
+        (0, BASE),
+        (0, BASE + " and then writes the results to parquet files"),
+        (1, BASE.replace("lazy", "sleepy")),
+        (2, "completely different text about cooking pasta with tomatoes and basil leaves"),
+    ]
+    df = session.createDataFrame(rows, "doc_id long, text string")
+
+    want = Counter((i, sh) for i, t in rows for sh in _shingle_set(t, 3))
+    got = Counter((r["doc_id"], r["shingle"]) for r in word_shingles(df, "text", 3).collect())
+    assert got == want
+    assert got[(0, "the quick brown")] == 2
+
+    def pairs(parts: int):
+        out = ngram_jaccard_pairs(df.repartition(parts), "text", 3)
+        return sorted(tuple(r) for r in out.collect())
+
+    one = pairs(1)
+    assert one == pairs(8)
+    sets = {}
+    for i, t in rows:
+        sets.setdefault(i, []).append(_shingle_set(t, 3))
+    (id_a, id_b, overlap, jaccard), = one
+    assert (id_a, id_b) == (0, 1)
+    assert overlap == sum(len(a & b) for a in sets[0] for b in sets[1])
+    n_a, n_b = min(map(len, sets[0])), min(map(len, sets[1]))
+    assert jaccard == pytest.approx(overlap / (n_a + n_b - overlap), abs=1e-4)
+
+
 def test_minhash_codegen_explode_single_exchange(session):
     """r8 shape: the k md5s are computed in a codegen'd projection over
     the exploded shingles (no interpreted higher-order lambdas) and the
